@@ -139,9 +139,7 @@ object TextFunctions {
     * identically everywhere — lets MinHash/SimHash signatures be verified
     * bit-exactly by a SQL oracle (`CAST('0x' || substring(md5(x),1,15) AS
     * BIGINT)` in DuckDB). ~2-3× slower than xxhash64; the dedup pipeline
-    * defaults to the portable family (one-pass kernel, oracle-verified)
-    * and exposes `base = Some(Dedup.xxhashBase)` for deployments that
-    * prefer the faster hash over oracle parity. */
+    * signs with the portable family (one-pass kernel, oracle-verified). */
   def portableHash60(c: Column): Column =
     // native kernel straight off the digest bytes — the previous
     // conv(substring(md5-hex)) form paid a per-row hex-string build plus

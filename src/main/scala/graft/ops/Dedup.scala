@@ -40,21 +40,6 @@ object Dedup {
 
   // -------------------------------------------------------- MinHash + LSH
 
-  /** K-permutation MinHash signature over shingles. Each "permutation" is
-    * xxhash64 seeded by the permutation index; min over shingles.
-    *
-    * Expression form (narrow, per-row) — fine for ad-hoc use, but the
-    * nested higher-order lambdas evaluate interpreted (no codegen). The
-    * pair pipeline below uses the one-pass native kernel
-    * (NativeExpressions.PortableMinHashSigs) instead; `minhashSignatures`
-    * (explode + codegen'd hash-aggregate) remains for custom base-hash
-    * families. */
-  @deprecated("interpreted per-row form (nested higher-order lambdas, no codegen); " +
-    "use NativeExpressions.portableMinHashSigs or minhashSignatures instead", "0.4")
-  def minhashSignature(shingles: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      p => array_min(transform(shingles, s => xxhash64(s, p))))
-
   /** Masks keeping h1 ≤ 60 bits and h2 ≤ 57 bits so h1 + 31·h2 stays
     * below 2^63 — the permutation family then computes with plain 64-bit
     * arithmetic in any engine (DuckDB errors on BIGINT overflow, Spark 4
@@ -63,15 +48,11 @@ object Dedup {
   val Mask60: Long = (1L << 60) - 1
   val Mask57: Long = (1L << 57) - 1
 
-  /** Two independent base hashes per shingle; permutation p is
-    * h1 + p·(h2 & Mask57) — Kirsch-Mitzenmacher double hashing, ONE digest
-    * per shingle instead of k. Default: xxhash64 pair (fastest). */
-  val xxhashBase: Column => (Column, Column) =
-    c => (xxhash64(c), xxhash64(c, lit(1)))
-
   /** Oracle-checkable base pair: md5 hex chars [1,15] and [16,30] as
     * BIGINTs (`CAST('0x' || substring(md5(x), ...) AS BIGINT)` in DuckDB).
-    * h1 is exactly TextFunctions.portableHash60. */
+    * h1 is exactly TextFunctions.portableHash60. Permutation p is
+    * h1 + p·(h2 & Mask57) — Kirsch-Mitzenmacher double hashing, ONE digest
+    * per shingle instead of k. */
   val portableBase: Column => (Column, Column) = { c =>
     val hx = md5(c.cast("binary"))
     (conv(substring(hx, 1, 15), 16, 10).cast("long"),
@@ -80,12 +61,11 @@ object Dedup {
 
   /** Signature table via explode + aggregate: one row per (doc, shingle),
     * ONE base-hash computation per row, then k codegen'd
-    * `min(h1 + p·h2)` aggregates with map-side combine. Input should be
-    * pre-spread across partitions (see `spread`) — shingling is CPU-dense,
-    * and a single small parquet file otherwise serializes it onto one
-    * task. */
+    * `min(h1 + p·h2)` aggregates with map-side combine — the SQL
+    * formulation the one-pass native kernel
+    * (NativeExpressions.PortableMinHashSigs) is checked against. */
   def minhashSignatures(shingled: DataFrame, k: Int,
-      base: Column => (Column, Column) = xxhashBase): DataFrame = {
+      base: Column => (Column, Column)): DataFrame = {
     // the masks guarantee h1 + p·h2 < 2^63 only for p ≤ 56; beyond that
     // ANSI Spark throws mid-aggregation (or silently wraps with ANSI off)
     require(k <= 57, s"k=$k permutations overflow the masked double-hash family (max 57)")
@@ -257,21 +237,16 @@ object Dedup {
     * thousands of docs) — at 100 TB such buckets otherwise dominate the
     * pair count quadratically; callers get them reported separately if
     * needed by inspecting bucket sizes themselves.
+    *
+    * Signatures come from the one-pass portable-md5 kernel
+    * (oracle-verifiable). `maxDegree > 0` caps each node's emitted pairs
+    * to its `maxDegree` HIGHEST-jaccard neighbors (union semantics,
+    * [[capPairDegree]]).
     */
-  /** `base = None` (default) signs with the one-pass portable-md5 kernel
-    * (oracle-verifiable); pass `Some(xxhashBase)` to trade oracle parity
-    * for a faster hash family at 100 TB — the signature pipeline then
-    * runs the generic explode+aggregate path. */
-  /** `maxDegree > 0` caps each node's emitted pairs to its `maxDegree`
-    * HIGHEST-jaccard neighbors (union semantics, [[capPairDegree]]).
-    * `materialize = false` returns the LAZY plan with no persist/
-    * checkpoint — the plan-audit seam (PlanAuditSpec) and the escape
-    * hatch for callers composing further before acting. */
   def minhashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, k: Int = 32, bands: Int = 8,
       jaccardThreshold: Double = 0.5, maxBucket: Int = 1000,
-      base: Option[Column => (Column, Column)] = None,
-      maxDegree: Int = 0, materialize: Boolean = true): DataFrame = {
+      maxDegree: Int = 0): DataFrame = {
     val rows = k / bands
     require(bands * rows == k, "k must be divisible by bands")
 
@@ -289,44 +264,35 @@ object Dedup {
     // checkpoint serialization here. Eager-checkpoint-the-intermediate is
     // the measured optimum among the lifecycle-clean options.
     // TRADEOFF: lineage is truncated (executor loss ⇒ job retry, not task
-    // recompute) and materialization happens at operator construction; a
-    // deployment preferring elasticity can pass materialize = false and
-    // manage persist lifecycle itself.
-    val shingledBase = spread(docs.select(
+    // recompute) and materialization happens at operator construction.
+    val shingled = spread(docs.select(
       col(idCol).as("id"),
       wordShingles(col(textCol), shingleN).as("shingles")))
-    val shingled =
-      if (materialize) shingledBase.localCheckpoint(true)
-      else shingledBase
+      .localCheckpoint(true)
 
-    // one-pass native signatures (portable md5 double-hash convention) by
-    // default — zero shuffle; a custom base hash routes through the
-    // generic explode+aggregate path
-    val signatures = base match {
-      case None => shingled.select(col("id"),
-        graft.functions.NativeExpressions.portableMinHashSigs(col("shingles"), k).as("sig"))
-      case Some(b) => minhashSignatures(shingled, k, b)
-    }
+    // one-pass native signatures (portable md5 double-hash convention) —
+    // zero shuffle
+    val signatures = shingled.select(col("id"),
+      graft.functions.NativeExpressions.portableMinHashSigs(col("shingles"), k).as("sig"))
     // Materialized ONCE: the banded table is read by the cap's count
     // aggregate AND both sides of the bucket self-join — unmaterialized,
     // the signature kernel (k md5 digests per document) re-ran per
     // consumer (when AQE picks a broadcast build for the self-join there
     // is no shared exchange to reuse; measured at sf0.1: the duplicate
     // pipelines were the query's top stages). Narrow (id, band,
-    // band_hash) rows; the capped result below stays LAZY — evaluating
-    // it is a map-side scan + broadcast filter of this checkpoint.
-    val banded0 = signatures
+    // band_hash) rows.
+    val banded = signatures
       .withColumn("banded", lshBands(col("sig"), bands, rows))
       .select(col("id"), explode(col("banded")).as("b"))
       .select(col("id"), col("b.band").as("band"), col("b.band_hash").as("band_hash"))
-    val banded = if (materialize) banded0.localCheckpoint(true) else banded0
+      .localCheckpoint(true)
 
     // Cap pathological buckets before pairing (quadratic-blowup guard);
     // materialized too — the capped table feeds both self-join sides, and
     // a second materialization of the narrow rows is cheaper than each
     // side re-running the scan + broadcast anti-filter.
-    val bucketed0 = dropOversizedBuckets(banded, Seq("band", "band_hash"), maxBucket)
-    val bucketed = if (materialize) bucketed0.localCheckpoint(true) else bucketed0
+    val bucketed = dropOversizedBuckets(banded, Seq("band", "band_hash"), maxBucket)
+      .localCheckpoint(true)
 
     // Candidate pairs ride as bare (id_a, id_b) — shingle arrays re-join
     // AFTER band-dedup, so the wide arrays cross the shuffle once per
@@ -403,14 +369,13 @@ object Dedup {
   def incrementalNearDups(batch: DataFrame, idCol: String, textCol: String,
       index: DataFrame, shingleN: Int = 3, k: Int = 32, bands: Int = 8,
       minMatches: Int = 16, maxBucket: Int = 1000,
-      maxMatchesPerProbe: Int = 0, materialize: Boolean = true): DataFrame = {
+      maxMatchesPerProbe: Int = 0): DataFrame = {
     // Batch signatures: consumed by the band explode AND both sides of
     // the verification join — eager localCheckpoint (not persist) for the
     // same measured reasons as the full-corpus pipeline above.
-    val bsigBase = minhashIndex(batch, idCol, textCol, shingleN, k)
-    val bsig = if (materialize) bsigBase.localCheckpoint(true) else bsigBase
+    val bsig = minhashIndex(batch, idCol, textCol, shingleN, k).localCheckpoint(true)
     incrementalNearDupsSigs(bsig, index, k, bands, minMatches, maxBucket,
-      maxMatchesPerProbe, materialize)
+      maxMatchesPerProbe)
   }
 
   /** Signature-level core of [[incrementalNearDups]]: both sides are
@@ -421,8 +386,7 @@ object Dedup {
     * should then already be materialized (it feeds three consumers). */
   def incrementalNearDupsSigs(bsig: DataFrame, index: DataFrame,
       k: Int = 32, bands: Int = 8, minMatches: Int = 16,
-      maxBucket: Int = 1000, maxMatchesPerProbe: Int = 0,
-      materialize: Boolean = true): DataFrame = {
+      maxBucket: Int = 1000, maxMatchesPerProbe: Int = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val rows = k / bands
     require(bands * rows == k, "k must be divisible by bands")
@@ -436,8 +400,8 @@ object Dedup {
     // plus both sides of the in-batch self-join) — materialize it once;
     // unmaterialized, each consumer re-ran the band explode and the cap's
     // count aggregate. Narrow rows: (id, band, band_hash).
-    val pband0 = dropOversizedBuckets(banded(bsig), Seq("band", "band_hash"), maxBucket)
-    val pband = if (materialize) pband0.localCheckpoint(true) else pband0
+    val pband = dropOversizedBuckets(banded(bsig), Seq("band", "band_hash"), maxBucket)
+      .localCheckpoint(true)
     val iband = dropOversizedBuckets(banded(index.select(col("id"), col("sig"))),
       Seq("band", "band_hash"), maxBucket)
 
@@ -521,8 +485,7 @@ object Dedup {
   /** `maxDegree > 0` additionally caps each node's emitted pairs to its
     * `maxDegree` LOWEST-hamming neighbors (union semantics,
     * [[capPairDegree]]) — the 100 TB guard against quadratic pair volume
-    * on dup-heavy corpora. `materialize = false` returns the lazy plan
-    * with no persist/checkpoint (plan-audit seam). */
+    * on dup-heavy corpora. */
   /** The 64-bit hamming banding scheme, shared by the symmetric pair
     * generator ([[simhashNearDupPairs]]) and the asymmetric probe
     * ([[hammingProbe]]) so the chunk width, probe expansion, and radius
@@ -548,8 +511,7 @@ object Dedup {
   }
 
   def simhashNearDupPairs(sims: DataFrame, maxHamming: Int = 3,
-      maxBucket: Int = 5000, maxDegree: Int = 0,
-      materialize: Boolean = true): DataFrame = {
+      maxBucket: Int = 5000, maxDegree: Int = 0): DataFrame = {
     HammingBands.requireRadius(maxHamming,
       alt = "; route coarser radii through minhashNearDupPairs")
     val chunks = HammingBands.Chunks
@@ -565,20 +527,16 @@ object Dedup {
     // upstream simhash computation re-ran per consumer. The capped
     // result stays LAZY: evaluating it is a map-side scan + broadcast
     // filter of this checkpoint.
-    val chunkedBase = sims.select(col("id"), col("simhash"),
+    val chunked = sims.select(col("id"), col("simhash"),
       explode(sequence(lit(0), lit(chunks - 1))).as("chunk"))
       .withColumn("chunk_val", HammingBands.chunkVal("simhash"))
-    val chunked =
-      if (materialize) chunkedBase.localCheckpoint(true)
-      else chunkedBase
+      .localCheckpoint(true)
     // degenerate-bucket guard (e.g. simhash 0 from empty docs at corpus
     // scale); breaks the exact-recall guarantee only for keys it drops.
     // In the pigeonhole regime the capped table feeds BOTH join sides —
     // materialize it (multi-probe consumes it once; lazy there).
     val capped0 = dropOversizedBuckets(chunked, Seq("chunk", "chunk_val"), maxBucket)
-    val capped =
-      if (materialize && pigeonhole) capped0.localCheckpoint(true)
-      else capped0
+    val capped = if (pigeonhole) capped0.localCheckpoint(true) else capped0
     val paired =
       if (pigeonhole) {
         // pigeonhole regime: symmetric equi-join on identical chunks
@@ -815,16 +773,14 @@ object Dedup {
     * must be > 0 (jaccard-0 pairs are meaningless output anyway). */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
       blockCol: String, shingleN: Int = 2, threshold: Double = 0.05,
-      maxDf: Int = 1000, materialize: Boolean = true): DataFrame = {
+      maxDf: Int = 1000): DataFrame = {
     require(threshold > 0, "inverted-index Jaccard emits only overlapping pairs")
     // eager localCheckpoint (not persist — block lifecycle, the Graph
     // lesson; measured tradeoff in the minhash comment): consumed by the
     // hot-shingle scan and the pruned index
-    val base0 = spread(docs.select(col(blockCol).as("block"), col(idCol).as("id"),
+    val base = spread(docs.select(col(blockCol).as("block"), col(idCol).as("id"),
       wordShingles(col(textCol), shingleN).as("sh")))
-    val base =
-      if (materialize) base0.localCheckpoint(true)
-      else base0
+      .localCheckpoint(true)
 
     // Stop-shingle pruning: a shingle appearing in m docs of a block yields
     // m² join rows — boilerplate (headers, license text) makes this the
@@ -845,14 +801,14 @@ object Dedup {
     // hot-aggregate + array_except pruning pipeline re-ran per side
     // (measured at sf0.1: the two duplicate pipelines were 25 s of the
     // query's 27 s task time). Same size class as the `base` checkpoint.
-    val pruned0 = base
+    val pruned = base
       .join(broadcast(hotPerBlock), Seq("block"), "left_outer")
       .withColumn("sh", when(col("hot").isNull, col("sh"))
         .otherwise(array_except(col("sh"), col("hot"))))
       .withColumn("n", size(col("sh")))
       .filter(col("n") > 0)
       .select(col("block"), col("id"), col("sh"), col("n"))
-    val pruned = if (materialize) pruned0.localCheckpoint(true) else pruned0
+      .localCheckpoint(true)
 
     val inv = pruned.select(col("block"), col("id"), col("n"), explode(col("sh")).as("shingle"))
     val l = inv.select(col("block"), col("shingle"), col("id").as("id_a"), col("n").as("n_a"))

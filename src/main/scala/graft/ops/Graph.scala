@@ -381,8 +381,7 @@ object Graph {
     * the dedup degree cap. Degrees come from the FULL graph; only
     * wedge CENTERS are capped. One wedge join, one hash-aggregate, one
     * anti-join against the edge set, one TakeOrdered. */
-  def linkPrediction(pairs: DataFrame, maxCenterDeg: Int, topK: Int,
-      materialize: Boolean = true): DataFrame = {
+  def linkPrediction(pairs: DataFrame, maxCenterDeg: Int, topK: Int): DataFrame = {
     val und = undirected(pairs.select(col("u").as("src"), col("v").as("dst")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val deg = und.groupBy(col("src")).agg(count(lit(1)).as("deg"))
@@ -399,9 +398,7 @@ object Graph {
       .orderBy(col("ra_e6").desc, col("a").asc, col("b").asc)
       .limit(topK)
     // eager checkpoint so `und` can release before return (the Graph
-    // lifecycle); materialize=false keeps the plan visible for audits —
-    // the caller then owns the persist lifecycle
-    if (!materialize) return ranked
+    // lifecycle)
     val out = ranked.localCheckpoint(true)
     und.unpersist()
     out

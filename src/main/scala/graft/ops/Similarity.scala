@@ -74,7 +74,7 @@ object Similarity {
   def lshNearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
       dim: Int, planes: Int = 6, tables: Int = 16,
       cosineThreshold: Double = 0.9, maxBucket: Int = 5000,
-      maxDegree: Int = 0, materialize: Boolean = true): DataFrame = {
+      maxDegree: Int = 0): DataFrame = {
     // spread before the CPU-dense signature computation: a single small
     // parquet file otherwise serializes all projection dots onto one task.
     // All tables' signatures come from one native kernel pass per vector
@@ -83,18 +83,16 @@ object Similarity {
     // eager localCheckpoint (not persist — block lifecycle, the Graph
     // lesson; measured tradeoff in the Dedup minhash comment): consumed
     // by the cap scan and both sides of the bucket join
-    val signedBase = Dedup.spread(corpus.select(col(idCol).as("id"), col(vecCol).as("v")))
+    val signed = Dedup.spread(corpus.select(col(idCol).as("id"), col(vecCol).as("v")))
       .select(col("id"),
         posexplode(graft.functions.NativeExpressions.rademacherSigs(
           col("v"), tables, planes, dim)).as(Seq("t", "sig")))
-    val signed =
-      if (materialize) signedBase.localCheckpoint(true)
-      else signedBase
+      .localCheckpoint(true)
     // degenerate-bucket guard: map-side anti-join drop (two-phase exact
     // count, see Dedup.dropOversizedBuckets); materialized — the capped
     // table feeds both sides of the bucket self-join
-    val capped0 = Dedup.dropOversizedBuckets(signed, Seq("t", "sig"), maxBucket)
-    val capped = if (materialize) capped0.localCheckpoint(true) else capped0
+    val capped = Dedup.dropOversizedBuckets(signed, Seq("t", "sig"), maxBucket)
+      .localCheckpoint(true)
     // candidate pairs carry ONLY scalar ids: dropDuplicates over array
     // payloads would plan as SortAggregate(first(v)) — a full sort of all
     // candidate pairs with 2 vectors each. Dedup the id pairs hash-side,

@@ -93,8 +93,8 @@ object ClusterArtifacts {
     * streaming link-graph sink keeps calling the extraction directly
     * (its input is the live micro-batch, not an immutable corpus). */
   def htmlLinks(spark: SparkSession, dir: String): DataFrame = {
+    val fx = graft.sources.Warc.ensureHtmlFixture(spark, dir) // hoisted: no nested buildOnce
     val path = Tables.buildOnce("graft_cluster_artifacts", dir, "html_links_v2") { out =>
-      val fx = graft.sources.Warc.ensureHtmlFixture(spark, dir)
       graft.sources.Warc.htmlLinks(graft.sources.Warc.scan(spark, fx).toDF())
         .write.mode("overwrite").parquet(out)
     }

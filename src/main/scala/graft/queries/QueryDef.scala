@@ -12,9 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class QueryDef(
     name: String,
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    /** part of the Bench headline set */
-    bench: Boolean = true)
+    oracle: Option[String])
 
 /** Central registry: every operator from SURVEY.md §2 that is implemented
   * shows up here, and SparkEntry derives its maps from this. */

@@ -66,18 +66,12 @@ object DirectoryIngest {
   /** Deterministic on-disk fixture for the ingest queries/tests: one
     * `<doc_id>.txt` per `documents` row with doc_id % `modulo` == 0,
     * written via foreachPartition (each task writes its partition's files —
-    * the B11 file-writer side-effect shape, never the driver). Idempotent
-    * via a marker file; content is a pure function of the table, so
-    * re-generation is safe. */
-  def ensureFixture(spark: SparkSession, sfDir: String, modulo: Int = 10): String = {
-    // full-canonical-path key (Tables.dirCacheKey): two corpora sharing a
-    // basename must not share a fixture (the Warc.ensureFixture fix)
-    val name = Tables.dirCacheKey(sfDir)
-    val out = java.nio.file.Paths.get(s"/tmp/graft_ingest_fixture/$name-m$modulo")
-    val marker = out.resolve("_COMPLETE")
-    if (!java.nio.file.Files.exists(marker)) {
-      java.nio.file.Files.createDirectories(out)
-      val outStr = out.toString // Path is not serializable; ship the string
+    * the B11 file-writer side-effect shape, never the driver). Built once
+    * per run (Tables.buildOnce); content is a pure function of the table,
+    * so re-generation is safe. */
+  def ensureFixture(spark: SparkSession, sfDir: String, modulo: Int = 10): String =
+    Tables.buildOnce("graft_ingest_fixture", sfDir, s"txt-m$modulo") { outStr =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outStr))
       Tables.documents(spark, sfDir)
         .filter(col("doc_id") % modulo === 0)
         .select(col("doc_id"), col("text"))
@@ -89,24 +83,17 @@ object DirectoryIngest {
               r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
           }
         }
-      java.nio.file.Files.write(marker, Array.emptyByteArray)
     }
-    out.toString
-  }
 
   /** Binary-document fixture: one GRFT-encoded `<doc_id>.bin` per
     * `documents` row with doc_id % `modulo` == 0 (BinaryDocs.encode), and
     * a DELIBERATELY CORRUPT file (last CRC byte flipped) for every
     * doc_id % (modulo*10) == 0 — the parse pipeline must isolate those as
     * `!error` records instead of failing the job. Same foreachPartition
-    * writer + idempotency marker as the txt fixture. */
-  def ensureBinaryFixture(spark: SparkSession, sfDir: String, modulo: Int = 7): String = {
-    val name = Tables.dirCacheKey(sfDir)
-    val out = java.nio.file.Paths.get(s"/tmp/graft_ingest_fixture/$name-bin-m$modulo")
-    val marker = out.resolve("_COMPLETE")
-    if (!java.nio.file.Files.exists(marker)) {
-      java.nio.file.Files.createDirectories(out)
-      val outStr = out.toString
+    * writer + build-once discipline as the txt fixture. */
+  def ensureBinaryFixture(spark: SparkSession, sfDir: String, modulo: Int = 7): String =
+    Tables.buildOnce("graft_ingest_fixture", sfDir, s"bin-m$modulo") { outStr =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outStr))
       val corruptEvery = modulo * 10
       Tables.documents(spark, sfDir)
         .filter(org.apache.spark.sql.functions.col("doc_id") % modulo === 0)
@@ -122,10 +109,7 @@ object DirectoryIngest {
             java.nio.file.Files.write(base.resolve(s"$id.bin"), bytes)
           }
         }
-      java.nio.file.Files.write(marker, Array.emptyByteArray)
     }
-    out.toString
-  }
 
   /** ZIP-container fixture: one docx-shaped `<doc_id>.docx` per
     * `documents` row with doc_id % `modulo` == 0 (ZipDocs.encode — a real
@@ -134,14 +118,10 @@ object DirectoryIngest {
     * stored `word/document.xml` payload is flipped, so the entry's CRC
     * check fails inside the parser and the record must isolate as
     * `!error = bad-zip` instead of failing the job. Same foreachPartition
-    * writer + idempotency marker as the other fixtures. */
-  def ensureZipFixture(spark: SparkSession, sfDir: String, modulo: Int = 11): String = {
-    val name = Tables.dirCacheKey(sfDir)
-    val out = java.nio.file.Paths.get(s"/tmp/graft_ingest_fixture/$name-zip-m$modulo")
-    val marker = out.resolve("_COMPLETE")
-    if (!java.nio.file.Files.exists(marker)) {
-      java.nio.file.Files.createDirectories(out)
-      val outStr = out.toString
+    * writer + build-once discipline as the other fixtures. */
+  def ensureZipFixture(spark: SparkSession, sfDir: String, modulo: Int = 11): String =
+    Tables.buildOnce("graft_ingest_fixture", sfDir, s"zip-m$modulo") { outStr =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outStr))
       val corruptEvery = modulo * 10
       Tables.documents(spark, sfDir)
         .filter(col("doc_id") % modulo === 0)
@@ -164,10 +144,7 @@ object DirectoryIngest {
             java.nio.file.Files.write(base.resolve(s"$id.docx"), bytes)
           }
         }
-      java.nio.file.Files.write(marker, Array.emptyByteArray)
     }
-    out.toString
-  }
 
   /** PDF fixture: one minimal single-page `<doc_id>.pdf` per `documents`
     * row with doc_id % `modulo` == 0 (PdfDocs.encode). ODD multiples of
@@ -177,15 +154,11 @@ object DirectoryIngest {
     * doc_id % (modulo*10) == 0 file is DELIBERATELY CORRUPT — the
     * `%PDF-` header magic is broken, so the record must isolate as
     * `!error = bad-pdf` instead of failing the job. Same
-    * foreachPartition writer + idempotency marker as the other
+    * foreachPartition writer + build-once discipline as the other
     * fixtures. */
-  def ensurePdfFixture(spark: SparkSession, sfDir: String, modulo: Int = 13): String = {
-    val name = Tables.dirCacheKey(sfDir)
-    val out = java.nio.file.Paths.get(s"/tmp/graft_ingest_fixture/$name-pdf-m$modulo")
-    val marker = out.resolve("_COMPLETE")
-    if (!java.nio.file.Files.exists(marker)) {
-      java.nio.file.Files.createDirectories(out)
-      val outStr = out.toString
+  def ensurePdfFixture(spark: SparkSession, sfDir: String, modulo: Int = 13): String =
+    Tables.buildOnce("graft_ingest_fixture", sfDir, s"pdf-m$modulo") { outStr =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outStr))
       val corruptEvery = modulo * 10
       val flateUnless = modulo * 2
       Tables.documents(spark, sfDir)
@@ -202,8 +175,5 @@ object DirectoryIngest {
             java.nio.file.Files.write(base.resolve(s"$id.pdf"), bytes)
           }
         }
-      java.nio.file.Files.write(marker, Array.emptyByteArray)
     }
-    out.toString
-  }
 }

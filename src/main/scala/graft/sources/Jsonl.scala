@@ -56,15 +56,10 @@ object Jsonl {
     * object the schema does not know — tolerant parsing must ignore it.
     * Document text is word-only (no quotes/backslashes), so lines need
     * no JSON escaping and the oracle can reconstruct every byte from the
-    * generating table. Idempotent via marker; keyed on the full
-    * canonical corpus path. */
-  def ensureFixture(spark: SparkSession, sfDir: String): String = {
-    val out = java.nio.file.Paths.get(
-      s"/tmp/graft_jsonl_fixture/${Tables.dirCacheKey(sfDir)}")
-    val marker = out.resolve("_COMPLETE")
-    if (!java.nio.file.Files.exists(marker)) {
-      java.nio.file.Files.createDirectories(out)
-      val outStr = out.toString
+    * generating table. Built once per run (Tables.buildOnce). */
+  def ensureFixture(spark: SparkSession, sfDir: String): String =
+    Tables.buildOnce("graft_jsonl_fixture", sfDir, "shards") { outStr =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outStr))
       Tables.documents(spark, sfDir)
         .filter(col("doc_id") % 3 === 1)
         .select(col("doc_id"), col("lang"), col("text"),
@@ -97,8 +92,5 @@ object Jsonl {
             }
           } finally if (w != null) w.close()
         }
-      java.nio.file.Files.write(marker, Array.emptyByteArray)
     }
-    out.toString
-  }
 }

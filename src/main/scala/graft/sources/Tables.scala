@@ -37,12 +37,12 @@ object Tables {
 
   /** Build-once on-disk artifact discipline — ONE implementation for
     * every derived /tmp cache (serving indexes, cluster chains, token
-    * shards): keyed on the FULL canonical corpus path; `name` is the
-    * VERSION CONTRACT (any change to parameters, layout, or hash
-    * convention MUST bump it — a stale same-named artifact would serve
-    * silently wrong data); idempotent via `_COMPLETE` marker,
-    * overwrite-mode builds make a crash before the marker rebuild
-    * cleanly. Assumes an immutable corpus dir.
+    * shards, the WARC/JSONL/directory ingest fixtures): keyed on the FULL
+    * canonical corpus path; `name` is the VERSION CONTRACT (any change to
+    * parameters, layout, or hash convention MUST bump it — a stale
+    * same-named artifact would serve silently wrong data); idempotent via
+    * `_COMPLETE` marker, overwrite-mode builds make a crash before the
+    * marker rebuild cleanly. Assumes an immutable corpus dir.
     *
     * Scope is ONE JVM: the path carries a per-process token, so every
     * fresh invocation (bench, verify, the driver's harness) computes
@@ -51,24 +51,29 @@ object Tables {
     * in-memory map + marker keep the build-once sharing across all
     * consumer queries (the 100 TB posture: one paragraph shuffle / LM
     * build / link extraction per corpus, not one per query). A shutdown
-    * hook deletes the run's artifact tree so repeated runs don't
-    * accumulate in /tmp. */
+    * hook deletes the run's artifact trees, and each `/tmp/<root>` left
+    * empty by that, so repeated runs don't accumulate in /tmp. */
   private val builtOnce = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val runToken: String =
     java.lang.Long.toHexString(new java.security.SecureRandom().nextLong())
   private val runRoots = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private lazy val cleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      runRoots.forEach { r =>
-        try {
-          import scala.jdk.CollectionConverters._
-          val p = java.nio.file.Paths.get(r)
-          if (java.nio.file.Files.exists(p))
-            java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(f =>
-                try java.nio.file.Files.deleteIfExists(f) catch { case _: Throwable => () })
-        } catch { case _: Throwable => () }
-      }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => runRoots.forEach(deleteRunTree(_))))
+
+  /** Deletes one run's artifact subtree, then its parent root when that
+    * is left empty. A root another live run still writes into is not
+    * empty, so the directory delete refuses it and it stays. Best effort:
+    * this runs in a shutdown hook, so every failure is swallowed. */
+  private[graft] def deleteRunTree(dir: String): Unit =
+    try {
+      import scala.jdk.CollectionConverters._
+      val p = java.nio.file.Paths.get(dir)
+      if (java.nio.file.Files.exists(p))
+        java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+          .iterator().asScala.foreach(f =>
+            try java.nio.file.Files.deleteIfExists(f) catch { case _: Throwable => () })
+      java.nio.file.Files.deleteIfExists(p.getParent)
+    } catch { case _: Throwable => () }
 
   /** The per-run directory an artifact lives in (exposed for tests). */
   def artifactDir(root: String, dir: String, name: String): String =

@@ -597,17 +597,11 @@ object Warc {
     * shards plain `.warc`, odd shards per-record-gzip-member `.warc.gz`.
     * Every doc_id % 70 == 0 record is written with a corrupt version line
     * ("WARC/9.9") so the query exercises resync isolation. Each shard is
-    * written by the one task that owns its records (B11 posture);
-    * idempotent via marker. */
-  def ensureFixture(spark: SparkSession, sfDir: String): String = {
-    // keyed on the FULL canonical path, not the basename — two corpora
-    // named ".../sf0.01" in different parents must not share a fixture
-    val out = java.nio.file.Paths.get(
-      s"/tmp/graft_warc_fixture/${Tables.dirCacheKey(sfDir)}")
-    val marker = out.resolve("_COMPLETE")
-    if (!java.nio.file.Files.exists(marker)) {
-      java.nio.file.Files.createDirectories(out)
-      val outStr = out.toString
+    * written by the one task that owns its records (B11 posture); built
+    * once per run (Tables.buildOnce). */
+  def ensureFixture(spark: SparkSession, sfDir: String): String =
+    Tables.buildOnce("graft_warc_fixture", sfDir, "segments") { outStr =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outStr))
       Tables.documents(spark, sfDir)
         .filter(col("doc_id") % 7 === 0)
         .select(col("doc_id"), col("text"),
@@ -650,10 +644,7 @@ object Warc {
             }
           } finally if (fos != null) fos.close()
         }
-      java.nio.file.Files.write(marker, Array.emptyByteArray)
     }
-    out.toString
-  }
 
   /** THE HTML link extraction — parsed `<a>` links from a frame of WARC
     * records: good text/html records only, whole
@@ -721,14 +712,11 @@ object Warc {
     * can reconstruct every (source, target, anchor) triple from the
     * documents table arithmetic alone (the q147 fixture posture:
     * construction-known, extraction-verified). 4 plain .warc shards by
-    * (d/5) % 4, one owning task each; idempotent via marker. */
-  def ensureHtmlFixture(spark: SparkSession, sfDir: String): String = {
-    val out = java.nio.file.Paths.get(
-      s"/tmp/graft_html_fixture/${Tables.dirCacheKey(sfDir)}")
-    val marker = out.resolve("_COMPLETE")
-    if (!java.nio.file.Files.exists(marker)) {
-      java.nio.file.Files.createDirectories(out)
-      val outStr = out.toString
+    * (d/5) % 4, one owning task each; built once per run
+    * (Tables.buildOnce). */
+  def ensureHtmlFixture(spark: SparkSession, sfDir: String): String =
+    Tables.buildOnce("graft_html_fixture", sfDir, "pages") { outStr =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outStr))
       val nDocs = Tables.documents(spark, sfDir).count()
       Tables.documents(spark, sfDir)
         .filter(col("doc_id") % 5 === 0)
@@ -777,8 +765,5 @@ object Warc {
             }
           } finally if (fos != null) fos.close()
         }
-      java.nio.file.Files.write(marker, Array.emptyByteArray)
     }
-    out.toString
-  }
 }

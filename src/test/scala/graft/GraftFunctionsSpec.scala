@@ -540,4 +540,18 @@ class GraftFunctionsSpec extends SparkSpec {
       .as[Int].collect().toSeq
     assert(got == want, s"got=$got want=$want")
   }
+
+  test("sigAgreeCount rejects a non-BIGINT array argument at analysis") {
+    import org.apache.spark.sql.functions.col
+    // the kernel reads raw longs: an ARRAY<INT> must be refused by the
+    // analyzer, not fail (or misread) at run time
+    val df = Seq((Seq(1, 2, 3), Seq(1L, 2L, 3L))).toDF("a", "b")
+    for ((l, r) <- Seq(("a", "b"), ("b", "a"))) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        df.select(graft.functions.NativeExpressions.sigAgreeCount(col(l), col(r)))
+          .collect()
+      }
+      assert(e.getMessage.contains("ARRAY<BIGINT>"), e.getMessage)
+    }
+  }
 }

@@ -39,34 +39,54 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), p.take(500))
   }
 
-  // The near-dup operators eagerly materialize their (small) pair result
-  // inside the call (persist-consume-release pattern), so the REGISTERED
-  // queries' final plans are checkpoint scans; the shapes are audited on
-  // the operators' lazy form (materialize = false), same parameters as
-  // the registered queries.
-  private def dedupLazyPlans: Map[String, String] = {
+  /** Every plan that building and running `frame` executes, as
+    * (action, executed plan) in completion order: the eager
+    * localCheckpoints an operator takes while it is built (each reported
+    * as a "localCheckpoint" action) and then the frame itself, run to a
+    * noop sink. The near-dup and link-prediction operators materialize
+    * their intermediates inside the call, so the shapes a scale claim
+    * is about sit in those checkpoint jobs, not in the returned frame's
+    * plan (an RDD scan of the last checkpoint). */
+  private def executedPlans(frame: => org.apache.spark.sql.DataFrame): Seq[(String, String)] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(action: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(action -> qe.executedPlan.toString)
+      def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // sibling suites cache source tables in the shared session
     spark.catalog.clearCache()
+    spark.listenerManager.register(listener)
+    try {
+      frame.write.format("noop").mode("overwrite").save()
+      org.apache.spark.SpecBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
+  /** The near-dup operators with the registered queries' parameters. */
+  private def dedupPlans(name: String): Seq[(String, String)] = {
     import graft.ops.{Dedup, Similarity}
     val docs = graft.sources.Tables.documents(spark, sf())
     val emb = graft.sources.Tables.embeddings(spark, sf())
     val sims = Dedup.simhashTable(docs, "doc_id", "text",
       hasher = graft.functions.TextFunctions.portableHash60)
-    Map(
-      "q12_minhash_neardup" -> Dedup.minhashNearDupPairs(docs, "doc_id", "text",
-        shingleN = 3, k = 32, bands = 8, jaccardThreshold = 0.5, materialize = false),
-      "q13b_simhash_neardup" -> Dedup.simhashNearDupPairs(sims, maxHamming = 7,
-        maxDegree = 4, materialize = false),
-      "q14_ngram_jaccard" -> Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        blockCol = "source", shingleN = 2, threshold = 0.05, maxDf = 1000,
-        materialize = false),
-      "q15b_ann_lsh" -> Similarity.lshNearDupPairs(emb, "vec_id", "embedding",
-        dim = 64, planes = 8, tables = 12, cosineThreshold = 0.3, maxDegree = 4,
-        materialize = false)
-    ).map { case (k, df) => k -> df.queryExecution.executedPlan.toString }
+    executedPlans(name match {
+      case "q12_minhash_neardup" => Dedup.minhashNearDupPairs(docs, "doc_id", "text",
+        shingleN = 3, k = 32, bands = 8, jaccardThreshold = 0.5)
+      case "q13b_simhash_neardup" => Dedup.simhashNearDupPairs(sims, maxHamming = 7,
+        maxDegree = 4)
+      case "q14_ngram_jaccard" => Dedup.ngramJaccardPairs(docs, "doc_id", "text",
+        blockCol = "source", shingleN = 2, threshold = 0.05, maxDf = 1000)
+      case "q15b_ann_lsh" => Similarity.lshNearDupPairs(emb, "vec_id", "embedding",
+        dim = 64, planes = 8, tables = 12, cosineThreshold = 0.3, maxDegree = 4)
+    })
   }
 
   test("LSH candidate dedup hash-aggregates (pairs must not drag vectors through a sort)") {
-    val p = dedupLazyPlans("q15b_ann_lsh")
+    val p = dedupPlans("q15b_ann_lsh").map(_._2).mkString("\n")
     assert(!p.contains("SortAggregate"),
       "dropDuplicates over array payloads planned as SortAggregate(first(v)) — " +
         "dedup scalar id pairs first, then re-join vectors")
@@ -78,9 +98,15 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("near-dup candidate generation never plans a cross product") {
-    val plans = dedupLazyPlans
     for (q <- Seq("q12_minhash_neardup", "q13b_simhash_neardup", "q14_ngram_jaccard")) {
-      val p = plans(q)
+      val plans = dedupPlans(q)
+      if (q == "q12_minhash_neardup") {
+        // three eager checkpoints (shingles, bands, capped bands), then
+        // the pair join itself
+        assert(plans.map(_._1).count(_ == "localCheckpoint") == 3 && plans.size == 4,
+          s"q12 capture: ${plans.map(_._1)}")
+      }
+      val p = plans.map(_._2).mkString("\n")
       assert(!p.contains("CartesianProduct"), s"$q plans a cartesian product")
       // broadcast NLJ appears only for the single-row/tiny broadcast sides
       // (e.g. hot-shingle arrays); the pair join itself must be hash-keyed
@@ -267,9 +293,8 @@ class PlanAuditSpec extends SparkSpec {
       .write.parquet(dir)
     val batch = spark.range(50, 60).selectExpr("id",
       "concat('word', id, ' alpha beta gamma') as text")
-    val p = graft.ops.Dedup.incrementalNearDups(batch, "id", "text",
-        spark.read.parquet(dir), materialize = false)
-      .queryExecution.executedPlan.toString
+    val p = executedPlans(graft.ops.Dedup.incrementalNearDups(batch, "id", "text",
+        spark.read.parquet(dir))).map(_._2).mkString("\n")
     val scanLines = p.split("\n").filter(_.contains("ReadSchema"))
     assert(scanLines.exists(_.contains("sig")), p.take(800))
     assert(!scanLines.exists(l => l.contains("stored_at") || l.contains("source_text")),
@@ -376,14 +401,13 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("link prediction: no cartesian product, wedge join is keyed, top-k is TakeOrdered") {
-    // the registered query eagerly checkpoints (Graph persist lifecycle),
-    // which hides the plan behind an RDD scan — audit the unmaterialized
-    // form on a synthetic graph (plan shape is data-independent)
+    // the operator eagerly checkpoints its top-k (Graph persist
+    // lifecycle): audit the checkpoint job's executed plan on a synthetic
+    // graph (plan shape is data-independent)
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("u", "v")
-    val p = graft.ops.Graph.linkPrediction(pairs, maxCenterDeg = 30, topK = 50,
-      materialize = false).queryExecution.executedPlan.toString
+    val p = executedPlans(graft.ops.Graph.linkPrediction(pairs, maxCenterDeg = 30, topK = 50))
+      .map(_._2).mkString("\n")
     assert(!p.contains("CartesianProduct"), "wedge join must be keyed")
     assert(p.contains("TakeOrderedAndProject"), "top-k must not global-sort")
   }
